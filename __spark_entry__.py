@@ -41,8 +41,8 @@ from html_parser_spark.streaming import stateful
 from html_parser_spark.operators.pipeline import (
     assemble_conversations,
     extraction_metrics,
-    run_dom_extraction,
     run_extraction,
+    salted_layout,
 )
 
 
@@ -79,21 +79,12 @@ def _extracted(spark: SparkSession, sf: float) -> DataFrame:
 
 
 def _tokenized(spark: SparkSession, sf: float) -> DataFrame:
-    """(conv_id, turn_idx, tokens) with the same explicit-partition-count
-    discipline as the extraction path (CLAUDE.md invariant)."""
+    """(conv_id, turn_idx, tokens) in the extraction path's layout."""
     key = ("tokens", id(spark), sf)
     df = _FRAME_CACHE.get(key)
     if df is None:
-        t = _transcripts(spark, sf)
-        n_parts = max(
-            t.sparkSession.sparkContext.defaultParallelism * 4,
-            int(t.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
-        salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(8))
         df = (
-            t.select("conv_id", "turn_idx", "text")
-            .repartition(n_parts, F.col("conv_id"), salt)
-            .sortWithinPartitions("conv_id", "turn_idx")
+            salted_layout(_transcripts(spark, sf))
             .select("conv_id", "turn_idx", tokenize_udf(F.col("text")).alias("tokens"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -119,10 +110,16 @@ def _extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dom_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOM-heuristic extraction (tree builder + text-density scoring —
     functions/domextract.py), spans serialized like the flagship."""
-    ext = run_dom_extraction(_transcripts(spark, _sf_of(sf_dir)))
+    ext = run_extraction(_transcripts(spark, _sf_of(sf_dir)), outputs=("dom",))
     return ext.select(
-        *[c for c in ext.columns if c != "spans"],
-        F.to_json("spans").alias("spans_json"),
+        "conv_id",
+        "turn_idx",
+        F.col("dom_main_text").alias("main_text"),
+        "err_count",
+        "parse_status",
+        F.col("dom_n_blocks").alias("n_blocks"),
+        F.col("dom_n_kept_blocks").alias("n_kept_blocks"),
+        F.to_json("dom_spans").alias("spans_json"),
     )
 
 
@@ -223,10 +220,6 @@ def _display_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB twin doesn't inline 128 shingle expressions.
 def _gate_mh():
     return {"n_hashes": dedup.GATE_N_HASHES, "n_bands": dedup.GATE_N_BANDS}
-
-
-def _minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_candidates(spark, sf_dir, **_gate_mh())
 
 
 def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

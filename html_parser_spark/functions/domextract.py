@@ -191,7 +191,7 @@ def dom_extract_from_tokens(
     max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
 ) -> dict:
     """DOM policy over an already-produced token stream — the seam the
-    fused one-tokenize pipeline (pipeline.run_extraction_full) uses so
+    one-tokenize pipeline (``pipeline.run_extraction(outputs=…)``) uses so
     the token policy, the DOM policy, and the link harvest share one
     tokenize pass.  Identical output to :func:`dom_extract` on the same
     text's stream."""

@@ -76,27 +76,6 @@ def _norm():
 NORM_SQL = "trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))"
 
 
-def exact_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Groups of exact (whitespace/case-normalized) duplicates."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.select("doc_id", F.md5(_norm()).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def exact_duplicates_sql(table: str = "documents") -> str:
-    return f"""
-    SELECT md5({NORM_SQL}) AS text_hash,
-           count(*) AS n_docs,
-           min(doc_id) AS keep_doc_id
-    FROM {table}
-    GROUP BY 1 HAVING count(*) > 1
-    """
-
-
 def _shingles():
     """Word 3-shingles of the normalized text; docs with <3 words use the
     whole normalized text as their single shingle.

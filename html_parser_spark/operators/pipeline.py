@@ -6,24 +6,29 @@ No RDDs, no custom Catalyst rules — Catalyst keeps column pruning and
 predicate pushdown on the scan because the UDF consumes exactly one column
 (``text``) and everything else passes through untouched.
 
-Scale notes (10^12-turn target, BASELINE.json north_rule):
+Two parts, composed by :func:`run_extraction`:
 
-- **Turn-level parallelism is safe**: the reference tokenizer
+- :func:`salted_layout` — the one partition policy (also used by the link
+  harvest and the gate's token frame).  The reference tokenizer
   (mod.rs:17-37) holds no cross-turn state, so rows can be partitioned
   arbitrarily.  Conversation skew (1% of conversations have 100× turns)
   and text-length skew (64 KB P99 tail) are both *compute* skew inside the
   Python worker — invisible to AQE, which only rebalances shuffle bytes.
-  The salted repartition below spreads any single conversation over
-  ``salt_k`` partitions while keeping (conv_id, salt) groups intact, and
+  The salt spreads any single conversation over ``SALT_K`` partitions
+  while keeping (conv_id, salt) groups intact, and
   ``sortWithinPartitions(conv_id, turn_idx)`` restores the stable turn
-  ordering the north_star requires.
-- **One shuffle total.**  The repartition is the only exchange in the
-  plan; the UDF and the projection pipeline on top of it.
-- **Arrow batches bound worker memory**: see plans/session.py.
+  ordering the north_star requires.  The repartition is the only
+  exchange in the plan.
+- :func:`extract_columns` — the per-row stage: one Arrow UDF whose row
+  loop (:func:`extract_rows`) tokenizes each turn once and runs every
+  requested policy (``outputs``) over that one token stream, then the
+  JVM-side span unpack.  Arrow batches bound worker memory: see
+  plans/session.py.
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import pandas as pd
@@ -38,7 +43,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.extract import extract
+from ..functions.domextract import dom_extract_from_tokens
+from ..functions.extract import extract_from_tokens
+from ..functions.links import links_from_tokens
+from ..functions.tokenizer import tokenize
 
 # NB: no per-span `kind` string — every span the current policy emits is
 # 'main', and a constant Python str per span cost ~30% of the UDF stage
@@ -52,18 +60,148 @@ SPAN = StructType(
     ]
 )
 
-# Span TRANSPORT encoding (round-4 A/B, VERDICT r03 item 6): the UDFs
-# emit each span as ONE int64 (start<<32 | end) and the projection on
+# Span TRANSPORT encoding (round-4 A/B, VERDICT r03 item 6): the UDF
+# emits each span as ONE int64 (start<<32 | end) and the projection on
 # top of the UDF unpacks to the public array<struct<start,end>> with a
 # codegen'd transform().  Arrow then moves a primitive list<int64>
 # instead of a list<struct<int32,int32>> built from Python tuples —
 # the tuple→StructArray conversion inside the Python worker was the
 # measurable cost, not the bytes.  The PUBLIC schema (and the driver
-# contract / goldens) is unchanged: `spans` is still
+# contract / goldens) is unchanged: every ``*spans`` column is still
 # array<struct<start,end>> on every DataFrame this module returns.
 # start/end are source offsets < 2^31, so the packed value is always a
 # non-negative int64.
 SPAN_PACKED = ArrayType(LongType())
+
+# per-link struct of the ``links`` output; the standalone harvest
+# (linkops.run_link_extraction) emits the same fields as flat rows
+LINK = StructType(
+    [
+        StructField("link_idx", IntegerType()),
+        StructField("href", StringType()),
+        StructField("anchor_text", StringType()),
+        StructField("src_start", IntegerType()),
+        StructField("src_end", IntegerType()),
+    ]
+)
+
+OUTPUTS = ("main", "dom", "links")
+
+# spread of one conversation over shuffle partitions (salted_layout)
+SALT_K = 8
+
+_STATUS_FIELDS = [
+    StructField("err_count", IntegerType()),
+    StructField("parse_status", StringType()),
+]
+# the token-stream policy (functions/extract.py)
+_MAIN_FIELDS = [
+    StructField("main_text", StringType()),
+    StructField("spans", SPAN_PACKED),
+    *_STATUS_FIELDS,
+    StructField("n_tokens", IntegerType()),
+    StructField("n_blocks", IntegerType()),
+    StructField("n_kept_blocks", IntegerType()),
+]
+# the DOM-heuristic policy (functions/domextract.py); err/status are
+# shared — same tokenize, same stream
+_DOM_FIELDS = [
+    StructField("dom_main_text", StringType()),
+    StructField("dom_spans", SPAN_PACKED),
+    StructField("dom_n_blocks", IntegerType()),
+    StructField("dom_n_kept_blocks", IntegerType()),
+]
+_LINK_FIELDS = [StructField("links", ArrayType(LINK))]
+
+# value of each column type in a row that produced no output
+_EMPTY = {StringType: "", ArrayType: [], IntegerType: 0}
+
+
+def _schema(outputs) -> StructType:
+    """UDF schema of the columns ``outputs`` asks for."""
+    if not outputs or not set(outputs) <= set(OUTPUTS):
+        raise ValueError(f"outputs must be a non-empty subset of {OUTPUTS}")
+    fields = list(_MAIN_FIELDS if "main" in outputs else _STATUS_FIELDS)
+    if "dom" in outputs:
+        fields += _DOM_FIELDS
+    if "links" in outputs:
+        fields += _LINK_FIELDS
+    return StructType(fields)
+
+
+def _pack(spans) -> list:
+    return [(s[0] << 32) | s[1] for s in spans]
+
+
+def extract_rows(texts, outputs=("main",)) -> pd.DataFrame:
+    """The row loop: one batch of turn texts → one frame of the columns
+    ``outputs`` asks for (see :func:`run_extraction`).  Each turn is
+    tokenized once and every requested policy runs over that one token
+    stream.
+
+    Failure contract: a NULL text gives an empty row with
+    ``parse_status='null_input'``; a row whose engine raises gives an
+    empty row with ``parse_status='engine_error'`` instead of failing the
+    task (and with it the job) — :func:`extraction_metrics` counts both
+    per status."""
+    schema = _schema(outputs)
+    main, dom, links = (o in outputs for o in OUTPUTS)
+
+    def empty(status):
+        return tuple(
+            status if f.name == "parse_status" else _EMPTY[type(f.dataType)]
+            for f in schema.fields
+        )
+
+    null_row = empty("null_input")
+    rows = []
+    for t in texts:
+        if t is None:
+            rows.append(null_row)
+            continue
+        try:
+            tokens, status, err = tokenize(t)
+            if main:
+                r = extract_from_tokens(tokens, status, err)
+                row = (
+                    r["main_text"],
+                    _pack(r["spans"]),
+                    r["err_count"],
+                    r["parse_status"],
+                    r["n_tokens"],
+                    r["n_blocks"],
+                    r["n_kept_blocks"],
+                )
+            else:
+                row = (err, status)
+            if dom:
+                d = dom_extract_from_tokens(tokens, status, err)
+                row += (
+                    d["main_text"],
+                    _pack(d["spans"]),
+                    d["n_blocks"],
+                    d["n_kept_blocks"],
+                )
+            if links:
+                row += (
+                    [
+                        (
+                            lk["link_idx"],
+                            lk["href"],
+                            lk["anchor_text"],
+                            lk["src_start"],
+                            lk["src_end"],
+                        )
+                        for lk in links_from_tokens(tokens)
+                    ],
+                )
+        except Exception:
+            # the row's fault, not the task's: keep the traceback in the
+            # worker log and the row in the output
+            logging.getLogger(__name__).exception("extraction failed on one row")
+            row = empty("engine_error")
+        rows.append(row)
+    return pd.DataFrame(rows, columns=schema.names)
 
 
 def _span_unpack(col):
@@ -77,74 +215,39 @@ def _span_unpack(col):
     )
 
 
-def _proj_ext(name):
-    """Project ``ext.<name>`` out of the UDF struct, unpacking spans
-    (any ``*spans`` column carries the packed-int64 transport)."""
-    c = F.col(f"ext.{name}")
-    if name.endswith("spans"):
-        c = _span_unpack(c)
-    return c.alias(name)
+def extract_columns(df: DataFrame, outputs=("main",)) -> DataFrame:
+    """The per-row stage: ``df`` with ``text`` replaced by the columns
+    ``outputs`` asks for (see :func:`run_extraction`); every other input
+    column passes through.  Adds no exchange — layout is the caller's choice
+    (:func:`salted_layout` for batch, input splits for streaming)."""
+    schema = _schema(outputs)
+
+    @pandas_udf(schema)
+    def extract_batches(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        # SCALAR_ITER: per-worker setup (entity dict, dispatch tables —
+        # module globals, ~100 KB, no broadcast needed, SURVEY.md §1.2)
+        # is paid once per task, not per batch
+        for texts in batches:
+            yield extract_rows(texts, outputs)
+
+    def project(name):
+        c = F.col(f"ext.{name}")
+        return (_span_unpack(c) if name.endswith("spans") else c).alias(name)
+
+    ext = df.withColumn("ext", extract_batches(F.col("text")))
+    return ext.select(
+        *[c for c in df.columns if c != "text"],
+        *[project(name) for name in schema.names],
+    )
 
 
-EXTRACT_SCHEMA = StructType(
-    [
-        StructField("main_text", StringType()),
-        StructField("spans", SPAN_PACKED),
-        StructField("err_count", IntegerType()),
-        StructField("parse_status", StringType()),
-        StructField("n_tokens", IntegerType()),
-        StructField("n_blocks", IntegerType()),
-        StructField("n_kept_blocks", IntegerType()),
-    ]
-)
-
-_COLS = [f.name for f in EXTRACT_SCHEMA.fields]
-
-
-def _extract_frame(texts: pd.Series) -> pd.DataFrame:
-    rows = []
-    for t in texts:
-        if t is None:
-            rows.append(("", [], 0, "null_input", 0, 0, 0))
-            continue
-        r = extract(t)
-        rows.append(
-            (
-                r["main_text"],
-                [(s[0] << 32) | s[1] for s in r["spans"]],
-                r["err_count"],
-                r["parse_status"],
-                r["n_tokens"],
-                r["n_blocks"],
-                r["n_kept_blocks"],
-            )
-        )
-    return pd.DataFrame(rows, columns=_COLS)
-
-
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """SCALAR_ITER pandas UDF: one Arrow batch of turn texts in, one batch
-    of extraction structs out.  Iterator form amortizes per-task setup
-    (entity dict + dispatch tables are module globals, imported once per
-    Python worker, ~100 KB — no broadcast needed, SURVEY.md §1.2)."""
-    for texts in batches:
-        yield _extract_frame(texts)
-
-
-def _salted_udf_stage(
-    pruned: DataFrame,
-    udf_col,
-    out_cols: list,
-    cols: list,
-    num_partitions: int | None,
-    salt_k: int,
-) -> DataFrame:
-    """The shared physical shape of every per-turn UDF pipeline: salted
-    repartition with an EXPLICIT partition count (CLAUDE.md invariant —
-    column-only repartition is AQE-coalescible and compressed-text
-    shuffles get merged under the Python compute), sortWithinPartitions
-    for stable (conv_id, turn_idx) order, one Arrow UDF, project."""
+def salted_layout(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """(conv_id, turn_idx, text) repartitioned by (conv_id, salt) into an
+    EXPLICIT partition count (CLAUDE.md invariant — a column-only
+    repartition is AQE-coalescible, and compressed-text shuffles get
+    merged under the Python compute), then sorted by (conv_id, turn_idx)
+    within each partition."""
+    pruned = df.select("conv_id", "turn_idx", "text")
     if num_partitions is None:
         # 2× cores.  4× was the r1 sweet spot (64→13.3k, 128→16.1k,
         # 256→10.8k turns/s) when per-task Python time dominated; the
@@ -154,153 +257,39 @@ def _salted_udf_stage(
         # 48p→26.1k, 64p→26.0k, 128p→22.9k turns/s.  2× keeps one wave
         # of slack for text-length skew (the salt spreads hot
         # conversations; a single straggler can't serialize the stage).
-        sc = pruned.sparkSession.sparkContext
+        spark = pruned.sparkSession
         num_partitions = max(
-            sc.defaultParallelism * 2,
-            int(pruned.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+            spark.sparkContext.defaultParallelism * 2,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
         )
-    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_k))
-    parted = pruned.repartition(num_partitions, F.col("conv_id"), salt)
-    ordered = parted.sortWithinPartitions("conv_id", "turn_idx")
-    ext = ordered.withColumn("ext", udf_col)
-    return ext.select(
-        *[c for c in cols if c != "text"],
-        *[_proj_ext(name) for name in out_cols],
-    )
+    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(SALT_K))
+    return pruned.repartition(
+        num_partitions, F.col("conv_id"), salt
+    ).sortWithinPartitions("conv_id", "turn_idx")
 
 
 def run_extraction(
     df: DataFrame,
     *,
+    outputs=("main",),
     num_partitions: int | None = None,
-    salt_k: int = 8,
-    passthrough: tuple = ("conv_id", "turn_idx"),
-    long_text_threshold: int | None = None,
-    source_partitioned: bool = False,
 ) -> DataFrame:
-    """transcripts DataFrame → extracted DataFrame.
+    """transcripts DataFrame → ``conv_id, turn_idx`` + the columns of
+    each policy in ``outputs`` ⊆ {"main", "dom", "links"}, in this order
+    whatever order ``outputs`` lists them in:
 
-    Output columns: ``passthrough + (main_text, spans, err_count,
-    parse_status, n_tokens, n_blocks, n_kept_blocks)``.
+    - ``"main"``: main_text, spans, err_count, parse_status, n_tokens,
+      n_blocks, n_kept_blocks.
+    - ``"dom"`` adds dom_main_text, dom_spans, dom_n_blocks,
+      dom_n_kept_blocks (without "main", err_count/parse_status lead).
+    - ``"links"`` adds a ``links`` array<struct> column with the
+      ``linkops.run_link_extraction`` fields (explode it for the per-link
+      table).
 
-    ``salt_k`` splits each conversation across up to ``salt_k`` shuffle
-    partitions (long-conversation skew); within a partition rows are
-    sorted by (conv_id, turn_idx) — the north_star's stable turn ordering.
-
-    ``long_text_threshold``: per-row COMPUTE skew (the 64 KB-P99 text
-    tail) is invisible to AQE, which only rebalances shuffle bytes.
-    When set, rows with ``length(text) > threshold`` are routed to a
-    dedicated round-robin-balanced pass (few rows per partition, so no
-    single task drags the stage tail) and unioned back.  At the 10^12
-    target set it near the corpus P99.
-
-    ``source_partitioned=True`` drops the salted repartition entirely —
-    ZERO exchanges in the plan.  Use when the source layout already
-    spreads conversations (the Iceberg DDL's ``bucket(512, conv_id)``
-    transform, or any layout where no single input split is hot): at
-    100 TB this saves shuffling the whole corpus once (~25 TB of lz4'd
-    shuffle I/O).  Rows are still sorted by (conv_id, turn_idx) within
-    each split.
-    """
-    cols = list(dict.fromkeys([*passthrough, "text"]))
-    pruned = df.select(*cols)
-    if source_partitioned:
-        ordered = pruned.sortWithinPartitions("conv_id", "turn_idx")
-        ext = ordered.withColumn("ext", extract_udf(F.col("text")))
-        return ext.select(
-            *[c for c in cols if c != "text"],
-            *[_proj_ext(name) for name in _COLS],
-        )
-    if long_text_threshold is not None:
-        is_long = F.length("text") > long_text_threshold
-        short = run_extraction(
-            pruned.filter(~is_long),
-            num_partitions=num_partitions,
-            salt_k=salt_k,
-            passthrough=passthrough,
-        )
-        sc = pruned.sparkSession.sparkContext
-        long_rows = (
-            pruned.filter(is_long)
-            .repartition(sc.defaultParallelism)  # round-robin: balanced by count
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .withColumn("ext", extract_udf(F.col("text")))
-        )
-        long_out = long_rows.select(
-            *[c for c in cols if c != "text"],
-            *[_proj_ext(name) for name in _COLS],
-        )
-        return short.unionByName(long_out)
-    return _salted_udf_stage(
-        pruned, extract_udf(F.col("text")), _COLS, cols, num_partitions, salt_k
-    )
-
-
-DOM_EXTRACT_SCHEMA = StructType(
-    [
-        StructField("main_text", StringType()),
-        StructField("spans", SPAN_PACKED),
-        StructField("err_count", IntegerType()),
-        StructField("parse_status", StringType()),
-        StructField("n_blocks", IntegerType()),
-        StructField("n_kept_blocks", IntegerType()),
-    ]
-)
-
-_DOM_COLS = [f.name for f in DOM_EXTRACT_SCHEMA.fields]
-
-
-@pandas_udf(DOM_EXTRACT_SCHEMA)
-def dom_extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """SCALAR_ITER pandas UDF over the DOM-heuristic extraction
-    (functions/domextract.py: tree builder + text-density scoring).
-    ``spans`` carries the same provenance contract as the flagship
-    (source ranges of the text runs in kept blocks)."""
-    from ..functions.domextract import dom_extract
-
-    for texts in batches:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(("", [], 0, "null_input", 0, 0))
-                continue
-            r = dom_extract(t)
-            rows.append(
-                (
-                    r["main_text"],
-                    [(s[0] << 32) | s[1] for s in r["spans"]],
-                    r["err_count"],
-                    r["parse_status"],
-                    r["n_blocks"],
-                    r["n_kept_blocks"],
-                )
-            )
-        yield pd.DataFrame(rows, columns=_DOM_COLS)
-
-
-def run_dom_extraction(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-    passthrough: tuple = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """transcripts DataFrame → DOM-extracted DataFrame.
-
-    Same partitioning discipline as :func:`run_extraction` (salted
-    repartition with an EXPLICIT partition count, sortWithinPartitions
-    for stable turn order, one Arrow UDF stage); the per-turn compute is
-    the tree-building scorer instead of the token-stream policy."""
-    cols = list(dict.fromkeys([*passthrough, "text"]))
-    pruned = df.select(*cols)
-    return _salted_udf_stage(
-        pruned,
-        dom_extract_udf(F.col("text")),
-        _DOM_COLS,
-        cols,
-        num_partitions,
-        salt_k,
-    )
+    Tokenization dominates every policy, so asking for several outputs
+    costs about one pass instead of one per policy (bench at sf0.1:
+    10.3 s for all three vs 4.5 + 8.2 + 3.5 s separately)."""
+    return extract_columns(salted_layout(df, num_partitions), outputs)
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
@@ -358,166 +347,3 @@ def assemble_conversations(df: DataFrame, max_turns: int = 4096) -> DataFrame:
         F.length(full_text).cast("long").alias("n_chars"),
         (F.size("turns") > max_turns).cast("long").alias("overflow"),
     ).orderBy("conv_id")
-
-
-def run_extraction_with_links(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-) -> DataFrame:
-    """Single-pass extraction + link harvest: one tokenize per turn feeds
-    BOTH the main-content policy and the link policy, so a pipeline that
-    wants text and the link graph pays one UDF stage instead of two —
-    tokenization dominates both operators (bench: extract 6.7 s +
-    links 12.9 s separately at sf0.1; this fuses the common pass).
-
-    Output = ``run_extraction`` columns + a ``links`` array column with
-    the ``run_link_extraction`` struct contract (explode it for the
-    per-link table).  Same salted one-shuffle physical shape."""
-    from ..functions.extract import extract_from_tokens
-    from ..functions.links import links_from_tokens
-    from ..functions.tokenizer import tokenize
-    from .linkops import LINK
-
-    schema = StructType(
-        EXTRACT_SCHEMA.fields + [StructField("links", ArrayType(LINK))]
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _frame(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(("", [], 0, "null_input", 0, 0, 0, []))
-                continue
-            tokens, status, err = tokenize(t)
-            r = extract_from_tokens(tokens, status, err)
-            links = [
-                (
-                    lk["link_idx"],
-                    lk["href"],
-                    lk["anchor_text"],
-                    lk["src_start"],
-                    lk["src_end"],
-                )
-                for lk in links_from_tokens(tokens)
-            ]
-            rows.append(
-                (
-                    r["main_text"],
-                    [(s[0] << 32) | s[1] for s in r["spans"]],
-                    r["err_count"],
-                    r["parse_status"],
-                    r["n_tokens"],
-                    r["n_blocks"],
-                    r["n_kept_blocks"],
-                    links,
-                )
-            )
-        return pd.DataFrame(rows, columns=cols)
-
-    @pandas_udf(schema)
-    def fused_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
-            yield _frame(texts)
-
-    in_cols = ["conv_id", "turn_idx", "text"]
-    return _salted_udf_stage(
-        df.select(*in_cols),
-        fused_udf(F.col("text")),
-        cols,
-        in_cols,
-        num_partitions,
-        salt_k,
-    )
-
-
-def run_extraction_full(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-) -> DataFrame:
-    """Everything from one tokenize: the flagship token-stream policy,
-    the DOM-heuristic policy, and the link harvest share a SINGLE
-    tokenize pass per turn — tokenization dominates all three, so a
-    pipeline wanting text + DOM-quality signals + the link graph pays
-    roughly the DOM pass alone instead of three UDF stages (bench:
-    4.1 + 7.6 + 3.5 s separately at sf0.1).
-
-    Output = ``run_extraction`` columns + ``dom_main_text``/``dom_spans``
-    /``dom_n_blocks``/``dom_n_kept_blocks`` (the ``run_dom_extraction``
-    contract; err/status are shared — same tokenize, same stream) + the
-    ``links`` array column.  Same salted one-shuffle physical shape."""
-    from ..functions.domextract import dom_extract_from_tokens
-    from ..functions.extract import extract_from_tokens
-    from ..functions.links import links_from_tokens
-    from ..functions.tokenizer import tokenize
-    from .linkops import LINK
-
-    schema = StructType(
-        EXTRACT_SCHEMA.fields
-        + [
-            StructField("dom_main_text", StringType()),
-            StructField("dom_spans", SPAN_PACKED),
-            StructField("dom_n_blocks", IntegerType()),
-            StructField("dom_n_kept_blocks", IntegerType()),
-            StructField("links", ArrayType(LINK)),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _frame(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(
-                    ("", [], 0, "null_input", 0, 0, 0, "", [], 0, 0, [])
-                )
-                continue
-            tokens, status, err = tokenize(t)
-            r = extract_from_tokens(tokens, status, err)
-            d = dom_extract_from_tokens(tokens, status, err)
-            links = [
-                (
-                    lk["link_idx"],
-                    lk["href"],
-                    lk["anchor_text"],
-                    lk["src_start"],
-                    lk["src_end"],
-                )
-                for lk in links_from_tokens(tokens)
-            ]
-            rows.append(
-                (
-                    r["main_text"],
-                    [(s[0] << 32) | s[1] for s in r["spans"]],
-                    r["err_count"],
-                    r["parse_status"],
-                    r["n_tokens"],
-                    r["n_blocks"],
-                    r["n_kept_blocks"],
-                    d["main_text"],
-                    [(s[0] << 32) | s[1] for s in d["spans"]],
-                    d["n_blocks"],
-                    d["n_kept_blocks"],
-                    links,
-                )
-            )
-        return pd.DataFrame(rows, columns=cols)
-
-    @pandas_udf(schema)
-    def full_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
-            yield _frame(texts)
-
-    in_cols = ["conv_id", "turn_idx", "text"]
-    return _salted_udf_stage(
-        df.select(*in_cols),
-        full_udf(F.col("text")),
-        cols,
-        in_cols,
-        num_partitions,
-        salt_k,
-    )

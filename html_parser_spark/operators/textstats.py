@@ -28,16 +28,14 @@ def _sql_list(words) -> str:
     return ", ".join(f"'{w}'" for w in words)
 
 
-def _tokens_expr() -> str:
-    return "split(trim(text), '\\\\s+')"
-
-
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting + length features per document, plus
-    the document fingerprint (round 4: :func:`fingerprints`' md5-over-
-    normalized-text columns folded in so both primitives share one gate
-    row — the 50-row snapshot cap, CLAUDE.md; both are single-projection
-    expressions over the same scan, so the fold costs nothing)."""
+    the document fingerprint (md5 over the whitespace-normalized
+    lowercase text — the exact-dedup key — and its length; round 4 folded
+    the former standalone fingerprint operator in here so both share one
+    gate row — the 50-row snapshot cap, CLAUDE.md; both are
+    single-projection expressions over the same scan, so the fold costs
+    nothing)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = F.when(F.trim("text") == "", F.array()).otherwise(
         F.split(F.trim("text"), r"\s+")
@@ -327,27 +325,6 @@ def distinct_counts_approx(
         )
         .orderBy("source")
     )
-
-
-def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 over the whitespace-normalized lowercase
-    text — the exact-dedup key, exposed as its own operator."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
-    return docs.select(
-        "doc_id",
-        F.md5(norm).alias("fingerprint"),
-        F.length(norm).cast("long").alias("norm_len"),
-    )
-
-
-def fingerprints_sql(table: str = "documents") -> str:
-    return f"""
-    SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fingerprint,
-           length(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS norm_len
-    FROM {table}
-    """
 
 
 def ngram_topk(spark: SparkSession, sf_dir: str, n_top: int = 20) -> DataFrame:

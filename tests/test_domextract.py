@@ -79,12 +79,12 @@ def test_whitespace_normalized():
 
 def test_spark_udf_matches_pure_python(spark):
     from html_parser_spark.fixtures import ensure_transcripts
-    from html_parser_spark.operators.pipeline import run_dom_extraction
+    from html_parser_spark.operators.pipeline import run_extraction
 
     t = spark.read.parquet(ensure_transcripts(0.001)).limit(200)
     got = {
-        (r["conv_id"], r["turn_idx"]): r["main_text"]
-        for r in run_dom_extraction(t, num_partitions=4).collect()
+        (r["conv_id"], r["turn_idx"]): r["dom_main_text"]
+        for r in run_extraction(t, outputs=("dom",), num_partitions=4).collect()
     }
     for row in t.select("conv_id", "turn_idx", "text").collect():
         exp = dom_extract(row["text"])["main_text"]

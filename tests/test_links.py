@@ -5,6 +5,8 @@ Corpus-level value truth lives in the entry-contract mirror
 policy on inputs where the expected output is known by hand.
 """
 
+import pytest
+
 from html_parser_spark.functions.links import extract_links
 
 
@@ -117,80 +119,29 @@ def test_links_robustness_fuzz():
                 assert 0 <= s <= e <= len(text), (text, r)
 
 
-def test_fused_extraction_links_matches_separate(spark):
-    """run_extraction_with_links must reproduce both separate operators
-    exactly — same extraction columns, same exploded link rows."""
+@pytest.mark.parametrize(
+    "outputs", [("main", "links"), ("main", "dom", "links")], ids="-".join
+)
+def test_fused_outputs_match_separate_runs(spark, outputs):
+    """One tokenize feeding several policies must reproduce each policy's
+    own run exactly: the main and DOM columns their single-output runs,
+    the exploded links the standalone harvest."""
     from pyspark.sql import functions as F
 
     from html_parser_spark.fixtures import ensure_transcripts
     from html_parser_spark.operators.linkops import run_link_extraction
-    from html_parser_spark.operators.pipeline import (
-        run_extraction,
-        run_extraction_with_links,
-    )
+    from html_parser_spark.operators.pipeline import run_extraction
 
     df = spark.read.parquet(ensure_transcripts(0.001))
-    fused = run_extraction_with_links(df, num_partitions=8)
-    ext_cols = [c for c in fused.columns if c != "links"]
+    fused = run_extraction(df, outputs=outputs, num_partitions=8)
 
-    got_ext = sorted(map(str, fused.select(*ext_cols).collect()))
-    want_ext = sorted(map(str, run_extraction(df, num_partitions=8).collect()))
-    assert got_ext == want_ext
+    def rows(frame):
+        return sorted(map(str, frame.collect()))
 
-    got_links = sorted(
-        map(
-            tuple,
-            fused.select(
-                "conv_id", "turn_idx", F.explode("links").alias("lk")
-            ).select("conv_id", "turn_idx", "lk.*").collect(),
-        )
-    )
-    want_links = sorted(
-        map(tuple, run_link_extraction(df, num_partitions=8).collect())
-    )
-    assert got_links == want_links
-
-
-def test_full_fused_extraction_matches_all_three(spark):
-    """run_extraction_full must reproduce the token policy, the DOM
-    policy, AND the link harvest exactly from its single tokenize."""
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.fixtures import ensure_transcripts
-    from html_parser_spark.operators.linkops import run_link_extraction
-    from html_parser_spark.operators.pipeline import (
-        run_dom_extraction,
-        run_extraction,
-        run_extraction_full,
-    )
-
-    df = spark.read.parquet(ensure_transcripts(0.001))
-    fused = run_extraction_full(df, num_partitions=8)
-
-    ext_cols = ["conv_id", "turn_idx", "main_text", "spans", "err_count",
-                "parse_status", "n_tokens", "n_blocks", "n_kept_blocks"]
-    got_ext = sorted(map(str, fused.select(*ext_cols).collect()))
-    want_ext = sorted(map(str, run_extraction(df, num_partitions=8).collect()))
-    assert got_ext == want_ext
-
-    dom = run_dom_extraction(df, num_partitions=8)
-    got_dom = sorted(
-        map(
-            str,
-            fused.select(
-                "conv_id",
-                "turn_idx",
-                F.col("dom_main_text").alias("main_text"),
-                F.col("dom_spans").alias("spans"),
-                "err_count",
-                "parse_status",
-                F.col("dom_n_blocks").alias("n_blocks"),
-                F.col("dom_n_kept_blocks").alias("n_kept_blocks"),
-            ).collect(),
-        )
-    )
-    want_dom = sorted(map(str, dom.collect()))
-    assert got_dom == want_dom
+    for out in ("main", "dom"):
+        if out in outputs:
+            alone = run_extraction(df, outputs=(out,), num_partitions=8)
+            assert rows(fused.select(*alone.columns)) == rows(alone), out
 
     got_links = sorted(
         map(

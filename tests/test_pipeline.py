@@ -13,6 +13,8 @@ import pytest
 from html_parser_spark.fixtures import ensure_transcripts
 from html_parser_spark.functions.extract import extract
 from html_parser_spark.operators.pipeline import (
+    extract_columns,
+    extract_rows,
     extraction_metrics,
     run_extraction,
 )
@@ -48,31 +50,23 @@ def test_row_level_equality_vs_pure_python(transcripts, extracted):
         assert row.parse_status == want["parse_status"]
 
 
-def test_plan_shape(transcripts):
+@pytest.mark.parametrize(
+    "outputs",
+    [("main",), ("dom",), ("main", "links"), ("main", "dom", "links")],
+    ids="-".join,
+)
+def test_plan_shape(transcripts, outputs):
     """Scan must prune to the 3 needed columns; UDF must run on the Arrow
-    path; exactly one exchange (the salted repartition).
+    path; exactly one exchange (the salted repartition) — whichever
+    policies the stage runs.
 
     clearCache first: if an earlier test persisted a matching plan
     subtree (the entry-contract frame cache does), Spark substitutes an
     InMemoryRelation whose stored plan text carries its own Exchange —
     the assertion is about the FRESH plan."""
     transcripts.sparkSession.catalog.clearCache()
-    plan = run_extraction(transcripts)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    assert plan.count("Exchange") == 1
-    scan_line = next(l for l in plan.splitlines() if "FileScan" in l)
-    read_schema = scan_line.split("ReadSchema: ")[1]
-    assert read_schema == "struct<conv_id:string,turn_idx:int,text:string>"
-
-
-def test_dom_plan_shape(transcripts):
-    """The DOM pipeline keeps the flagship's plan discipline: pruned
-    scan, one exchange, Arrow UDF path."""
-    from html_parser_spark.operators.pipeline import run_dom_extraction
-
-    transcripts.sparkSession.catalog.clearCache()  # see test_plan_shape
     plan = (
-        run_dom_extraction(transcripts)
+        run_extraction(transcripts, outputs=outputs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -106,7 +100,7 @@ def test_salting_spreads_hot_conversations(spark, transcripts):
     if hot["count"] < 16:
         pytest.skip("fixture too small to contain a hot conversation")
     parts = (
-        run_extraction(transcripts, num_partitions=8, salt_k=8)
+        run_extraction(transcripts, num_partitions=8)
         .filter(F.col("conv_id") == hot.conv_id)
         .withColumn("pid", F.spark_partition_id())
         .select("pid")
@@ -140,21 +134,48 @@ def test_stable_turn_ordering_within_partitions(spark, transcripts):
     assert res and all(r.ok for r in res)
 
 
-def test_source_partitioned_skips_shuffle(spark, transcripts):
-    """Bucketed-source mode: zero exchanges, identical results."""
-    from pyspark.sql import functions as F
+def test_layout_does_not_change_values(spark, transcripts):
+    """Unsalted (one partition), salted, and no layout at all (the
+    per-row stage straight over the pruned scan) give the same rows; the
+    bare stage adds no exchange."""
+    cols = ("conv_id", "turn_idx", "main_text", "spans", "err_count",
+            "parse_status")
 
-    noshuffle = run_extraction(transcripts, source_partitioned=True)
-    plan = noshuffle._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan
+    def rows(df):
+        return {tuple(map(str, r)) for r in df.select(*cols).collect()}
 
-    want = {
-        (r.conv_id, r.turn_idx, r.main_text)
-        for r in run_extraction(transcripts, num_partitions=8).collect()
-    }
-    got = {(r.conv_id, r.turn_idx, r.main_text) for r in noshuffle.collect()}
-    assert got == want
+    transcripts.sparkSession.catalog.clearCache()  # see test_plan_shape
+    bare = extract_columns(transcripts.select("conv_id", "turn_idx", "text"))
+    assert "Exchange" not in bare._jdf.queryExecution().executedPlan().toString()
+    want = rows(run_extraction(transcripts, num_partitions=8))
+    assert len(want) == transcripts.count()
+    assert rows(run_extraction(transcripts, num_partitions=1)) == want
+    assert rows(bare) == want
+
+
+def test_raising_row_lands_in_status(monkeypatch):
+    """A row whose engine raises becomes parse_status='engine_error' with
+    empty outputs; its neighbours in the batch are untouched."""
+    import pandas as pd
+
+    from html_parser_spark.operators import pipeline
+
+    real = pipeline.tokenize
+
+    def tokenize(text):
+        if text == "<p>boom</p>":
+            raise RuntimeError("injected")
+        return real(text)
+
+    monkeypatch.setattr(pipeline, "tokenize", tokenize)
+    texts = pd.Series(["<p>good</p>", "<p>boom</p>", None])
+    got = extract_rows(texts, ("main", "dom", "links"))
+    assert list(got["parse_status"]) == ["ok", "engine_error", "null_input"]
+    assert got["main_text"][0] == "good"
+    bad = got.iloc[1]
+    assert (bad["main_text"], bad["dom_main_text"]) == ("", "")
+    assert (list(bad["spans"]), list(bad["links"])) == ([], [])
+    assert (bad["err_count"], bad["n_tokens"], bad["dom_n_blocks"]) == (0, 0, 0)
 
 
 def test_edge_inputs_flow_through(spark):

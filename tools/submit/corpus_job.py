@@ -133,7 +133,7 @@ def main() -> None:
         dedup_cluster_keep_list,
         decontaminate,
     )
-    from html_parser_spark.operators.pipeline import run_extraction_with_links
+    from html_parser_spark.operators.pipeline import run_extraction
     from html_parser_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -242,19 +242,12 @@ def main() -> None:
     else:
         transcripts = spark.read.parquet(args.input)
         n_turns = transcripts.count()
-        if args.with_dom:
-            # the three-way fusion: the SAME tokenize also runs the
-            # DOM-heuristic policy; dom_* columns ride the fused
-            # checkpoint for downstream quality models (cost ≈ the DOM
-            # pass alone instead of a second full UDF stage — BENCH.md
-            # round 4)
-            from html_parser_spark.operators.pipeline import (
-                run_extraction_full,
-            )
-
-            extracted = run_extraction_full(transcripts)
-        else:
-            extracted = run_extraction_with_links(transcripts)
+        # --with-dom: the SAME tokenize also runs the DOM-heuristic
+        # policy; dom_* columns ride the fused checkpoint for downstream
+        # quality models (cost ≈ the DOM pass alone instead of a second
+        # full UDF stage — BENCH.md round 4)
+        outputs = ("main", "dom", "links") if args.with_dom else ("main", "links")
+        extracted = run_extraction(transcripts, outputs=outputs)
         extracted.write.mode("overwrite").parquet(
             os.path.join(args.work, "fused")
         )
