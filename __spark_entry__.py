@@ -163,11 +163,10 @@ def _link_target_stats_oracle() -> str:
 
 
 def _link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point-integer PageRank over the doc→url link graph — the
-    gate form of the float production scorer (round 5; VERDICT r4 item
-    4).  Integer mass makes the per-round sums order-independent, so
-    the md5 value gate holds bit-exactly; the float twin stays
-    pytest-pinned vs an independent dense NumPy iteration."""
+    """PageRank over the doc→url link graph, top 100 by rank.  The one
+    scorer is fixed-point: integer mass makes the per-round sums
+    order-independent, so the md5 value gate holds bit-exactly against
+    the DuckDB twin."""
     from html_parser_spark.operators.linkrank import link_pagerank_fp
 
     return link_pagerank_fp(spark, sf_dir, iterations=4, top_k=100)

@@ -14,19 +14,16 @@ Scale shape:
   over pre-shrunk (href, anchor) counts) + one href equi-join +
   TakeOrderedAndProject.  Everything that shuffles is ids/counts; text
   crosses the wire only as the anchor strings being aggregated.
-- ``pagerank``: the classic ids-only iteration — edges join ranks on
-  the source key, contributions aggregate on the destination key,
-  ``localCheckpoint`` per round truncates lineage (the
-  connected-components lesson, BENCH.md r3).  The only driver-side
-  values per round are two scalars (total/dangling mass), the same
-  class of post-agg metric scalar as resume.py's.
+- ``pagerank_fixed``: the classic ids-only iteration — edges join ranks
+  on the source key, contributions aggregate on the destination key.
 
-PageRank is deliberately NOT a driver-gate row: it is float-valued and
-cross-engine float summation order differs, so a bit-exact md5 hash
-would be flaky by construction (CLAUDE.md: never ROUND on doubles).
-Its correctness is pytest-pinned instead against an independent dense
-NumPy power iteration on the same edge list (test_linkrank.py), plus
-invariants (mass conservation, teleport floor).
+There is one PageRank, and it is fixed-point: rank mass is int64 units
+of ``1/FP_SCALE``, so the per-round sums are order-independent and
+``link_pagerank_fp`` is the ``link_pagerank`` gate row, md5-checked
+against ``link_pagerank_sql`` (the same integer recurrence unrolled in
+DuckDB).  test_linkrank.py also pins ``rank_fp / FP_SCALE`` to an
+independent dense NumPy float iteration, plus invariants (mass
+conservation, teleport floor, dangling recirculation).
 """
 
 from __future__ import annotations
@@ -123,152 +120,36 @@ def link_target_stats_sql(golden_path: str, top_k: int = 100) -> str:
     """
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """PageRank over an edge list ``(src, dst)`` (any node id type).
-
-    Standard power iteration with uniform teleport and dangling-mass
-    redistribution:
-
-        r'(v) = (1-d)/N + d * (sum_{u->v} r(u)/deg(u) + dangling/N)
-
-    Physical shape per round: edges ⋈ ranks on src (both sides keyed by
-    node id), groupBy dst partial+final agg, one scalar agg for the
-    dangling mass.  ``localCheckpoint`` every ``checkpoint_every``
-    rounds — without it Catalyst re-analyzes a k-deep join tree every
-    round (measured on connected components: per-round wall GREW 18→104 s
-    under bare persist, BENCH.md r3).
-
-    Returns (node, rank) for every node that appears in the graph.
-    """
-    spark = edges.sparkSession
-    edges = edges.select(
-        F.col(edges.columns[0]).cast("string").alias("src"),
-        F.col(edges.columns[1]).cast("string").alias("dst"),
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return spark.createDataFrame([], "node string, rank double")
-    out_deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint()
-
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    teleport = (1.0 - damping) / n_nodes
-    prev_ckpt = None
-    for i in range(iterations):
-        # ONE ranks⋈out_deg join per round feeds both the dangling mass
-        # and the per-edge shares (the old code planned it twice)
-        with_deg = ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
-        # dangling mass: rank held by nodes with no out-edges — a lazy
-        # 1-row aggregate broadcast into the update instead of a per-round
-        # .collect(): each round adds plan depth but NO action, so the
-        # uncheckpointed lineage is evaluated once per checkpoint window
-        # rather than re-run by every round's driver scalar
-        dangling = with_deg.filter(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
-        )
-        shares = with_deg.filter(F.col("deg").isNotNull()).select(
-            F.col("node").alias("u"),
-            (F.col("rank") / F.col("deg")).alias("share"),
-        )
-        contribs = edges.join(shares, edges["src"] == F.col("u")).select(
-            F.col("dst").alias("node"), F.col("share")
-        )
-        summed = contribs.groupBy("node").agg(F.sum("share").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_ranks = ranks.localCheckpoint()
-            # the new checkpoint is materialized; the superseded one's
-            # blocks are dead weight (unpersist() alone is a no-op on
-            # local checkpoints — see free_local_checkpoint)
-            if prev_ckpt is not None:
-                free_local_checkpoint(prev_ckpt)
-            prev_ckpt = new_ranks
-            ranks = new_ranks
-    if iterations > 0:
-        # the returned frame is checkpointed (the last round always
-        # checkpoints), so the helper tables' blocks are releasable;
-        # with iterations=0 ranks still reads THROUGH nodes — keep them
-        free_local_checkpoint(nodes)
-        free_local_checkpoint(out_deg)
-    return ranks
-
-
-def link_pagerank(
-    spark: SparkSession, sf_dir: str, iterations: int = 10
-) -> DataFrame:
-    """PageRank over the bipartite (turn-document → href) corpus link
-    graph: documents contribute their rank to the targets they cite;
-    targets are sinks whose mass recirculates via the dangling term.
-    Node ids: ``doc:<conv_id>#<turn_idx>`` and ``url:<href>``."""
-    links = _links(spark, sf_dir)
-    edges = links.select(
-        F.concat(F.lit("doc:"), "conv_id", F.lit("#"), "turn_idx").alias(
-            "src"
-        ),
-        F.concat(F.lit("url:"), "href").alias("dst"),
-    )
-    return pagerank(edges, iterations=iterations)
-
-
-# ----------------------------------------------- fixed-point gate variant
-
 # Total rank mass in fixed-point units.  Integer arithmetic is
-# associative — unlike the float iteration above, the per-round sums are
-# order-independent, so Spark and DuckDB produce bit-identical ranks and
-# the operator can ride the md5 value gate (VERDICT r4 item 4; CLAUDE.md:
-# never ROUND on doubles — so don't: keep the mass integral end to end).
+# associative, so the per-round sums are order-independent: Spark and
+# DuckDB produce bit-identical ranks and the operator rides the md5
+# value gate (never ROUND on doubles: keep the mass integral end to
+# end).
 FP_SCALE = 10**12
 FP_DAMP_NUM = 85
 FP_DAMP_DEN = 100
+# Rounds between localCheckpoints (the last round always checkpoints).
+CHECKPOINT_EVERY = 3
 
 
-def pagerank_fixed(
-    edges: DataFrame,
-    *,
-    iterations: int = 4,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Fixed-point-integer PageRank: the same power iteration and the
-    same physical shape as :func:`pagerank` (edges ⋈ ranks on src,
-    groupBy dst, lazy 1-row dangling aggregate) with all mass carried
-    as int64 units of ``1/FP_SCALE``:
+def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
+    """PageRank over an edge list ``(src, dst)`` (any node id type):
+    power iteration with uniform teleport and dangling-mass
+    redistribution, all mass carried as int64 units of ``1/FP_SCALE``:
 
         r'(v) = (15·M div 100) div N
                 + (85 · (S(v) + D div N)) div 100
 
     where ``M = FP_SCALE``, ``S(v) = Σ_{u→v} r(u) div deg(u)`` and
     ``D = Σ_{deg(u)=0} r(u)``.  Integer division loses ≤1 unit per
-    term (≤ deg·1e-12 of the mass per round) — the float twin remains
-    the production scorer; this form exists so the gate can verify the
-    ITERATION (joins, dangling redistribution, teleport) exactly.
-    Overflow-safe: every intermediate ≤ 85·M < 2^47.
+    term (≤ deg·1e-12 of the mass per round).  Overflow-safe: every
+    intermediate ≤ 85·M < 2^47.
+
+    Per round: edges ⋈ ranks on src, groupBy dst, a lazy 1-row dangling
+    aggregate.  ``localCheckpoint`` every ``CHECKPOINT_EVERY`` rounds —
+    without it Catalyst re-analyzes a k-deep join tree every round
+    (connected components: per-round wall GREW 18→104 s, BENCH.md r3).
+    Returns (node, rank_fp) for every node in the graph.
     """
     spark = edges.sparkSession
     edges = edges.select(
@@ -294,7 +175,13 @@ def pagerank_fixed(
     teleport = ((FP_SCALE * (FP_DAMP_DEN - FP_DAMP_NUM)) // FP_DAMP_DEN) // n_nodes
     prev_ckpt = None
     for i in range(iterations):
+        # ONE ranks⋈out_deg join per round feeds both the dangling mass
+        # and the per-edge shares
         with_deg = ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
+        # dangling mass: rank held by nodes with no out-edges — a lazy
+        # 1-row aggregate broadcast into the update instead of a per-round
+        # .collect(): each round adds plan depth but NO action, so the
+        # uncheckpointed lineage is evaluated once per checkpoint window
         dangling = with_deg.filter(F.col("deg").isNull()).agg(
             F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling")
         )
@@ -320,13 +207,19 @@ def pagerank_fixed(
                 ).cast("long").alias("rank_fp"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
             new_ranks = ranks.localCheckpoint()
+            # the new checkpoint is materialized; the superseded one's
+            # blocks are dead weight (unpersist() alone is a no-op on
+            # local checkpoints — see free_local_checkpoint)
             if prev_ckpt is not None:
                 free_local_checkpoint(prev_ckpt)
             prev_ckpt = new_ranks
             ranks = new_ranks
     if iterations > 0:
+        # the returned frame is checkpointed (the last round always
+        # checkpoints), so the helper tables' blocks are releasable;
+        # with iterations=0 ranks still reads THROUGH nodes — keep them
         free_local_checkpoint(nodes)
         free_local_checkpoint(out_deg)
     return ranks
@@ -335,9 +228,12 @@ def pagerank_fixed(
 def link_pagerank_fp(
     spark: SparkSession, sf_dir: str, iterations: int = 4, top_k: int = 100
 ) -> DataFrame:
-    """Gate form of :func:`link_pagerank`: fixed-point ranks over the
-    same doc→url bipartite graph, top ``top_k`` by (rank_fp DESC, node
-    ASC) — TakeOrderedAndProject, never a global sort."""
+    """PageRank over the bipartite (turn-document → href) corpus link
+    graph: documents contribute their rank to the targets they cite;
+    targets are sinks whose mass recirculates via the dangling term.
+    Node ids: ``doc:<conv_id>#<turn_idx>`` and ``url:<href>``.  Top
+    ``top_k`` by (rank_fp DESC, node ASC) — TakeOrderedAndProject,
+    never a global sort."""
     links = _links(spark, sf_dir)
     edges = links.select(
         F.concat(F.lit("doc:"), "conv_id", F.lit("#"), "turn_idx").alias("src"),

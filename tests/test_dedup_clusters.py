@@ -254,24 +254,3 @@ def test_iterative_checkpoints_release_storage(spark):
     leaked = n_stored() - base
     assert leaked <= 1, f"{leaked} RDDs left in storage (expected ≤1: the returned frame)"
 
-
-def test_pagerank_releases_superseded_checkpoints(spark):
-    from html_parser_spark.operators.linkrank import pagerank
-
-    jsc = spark.sparkContext._jsc.sc()
-
-    def n_stored():
-        return len(jsc.getRDDStorageInfo())
-
-    spark.catalog.clearCache()
-    base = n_stored()
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
-    )
-    # 9 rounds at checkpoint_every=3 → 3 checkpoints; only the final
-    # one (the returned frame) may remain, nodes/out_deg must be freed
-    ranks = pagerank(edges, iterations=9)
-    total = sum(r.rank for r in ranks.collect())
-    assert abs(total - 1.0) < 1e-9
-    leaked = n_stored() - base
-    assert leaked <= 1, f"{leaked} RDDs left in storage (expected ≤1: the returned frame)"

@@ -94,6 +94,37 @@ def test_spark_matches_pure_python(spark):
     assert got == want
 
 
+def test_raising_row_emits_no_links(monkeypatch):
+    """A row whose harvest raises emits no links; its neighbours in the
+    batch still emit theirs instead of the task failing."""
+    import pandas as pd
+
+    from html_parser_spark.operators import linkops
+
+    real = linkops.extract_links
+
+    def boom(text):
+        if text == "<a href=/boom>x</a>":
+            raise RuntimeError("injected")
+        return real(text)
+
+    monkeypatch.setattr(linkops, "extract_links", boom)
+    pdf = pd.DataFrame({
+        "conv_id": ["c0", "c0", "c0", "c0"],
+        "turn_idx": [0, 1, 2, 3],
+        "text": ["<a href=/a>one</a>", "<a href=/boom>x</a>", None,
+                 "<a href=/b>two</a> <a href=/c>three</a>"],
+    })
+    got = linkops.link_rows(pdf)
+    assert list(got.columns) == [
+        "conv_id", "turn_idx", "link_idx", "href", "anchor_text",
+        "src_start", "src_end",
+    ]
+    assert list(zip(got["turn_idx"], got["link_idx"], got["href"])) == [
+        (0, 0, "/a"), (3, 0, "/b"), (3, 1, "/c"),
+    ]
+
+
 def test_links_robustness_fuzz():
     """Adversarial garbage in → no crash, invariants out (same pattern
     as the tree/DOM/PDF robustness fuzz): hrefs non-null, link_idx

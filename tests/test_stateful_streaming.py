@@ -99,3 +99,31 @@ def test_stateful_sessionize_matches_batch(spark, event_files, tmp_path):
         for r in batch
         if r.session_seq == last_seq[r.user_id]
     )
+
+
+def test_sessionize_backfill_removes_its_stage(spark):
+    """The backfill's staged event files and checkpoint are removed once
+    the query terminates; the returned frame still collects every
+    non-final batch session."""
+    import glob
+    import os
+    import tempfile
+
+    from html_parser_spark.streaming.stateful import run_sessionize_backfill
+
+    pattern = os.path.join(tempfile.gettempdir(), "sess_stage_*")
+    before = set(glob.glob(pattern))
+    got = run_sessionize_backfill(spark, SF_DIR).collect()
+    assert set(glob.glob(pattern)) - before == set()
+
+    batch = sessionize(spark, SF_DIR).collect()
+    last_seq = {}
+    for r in batch:
+        last_seq[r.user_id] = max(last_seq.get(r.user_id, 0), r.session_seq)
+    want = sorted(
+        (r.user_id, r.start_sec, r.end_sec, r.n_events)
+        for r in batch
+        if r.session_seq < last_seq[r.user_id]
+    )
+    assert want
+    assert [tuple(r) for r in got] == want
