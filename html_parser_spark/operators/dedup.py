@@ -1030,9 +1030,16 @@ def _sketch_components(
     # the sf1.0 quality reps (821,135 distinct sketches, identical
     # 440,734-component output): hoisted 68.0/64.5 s vs per-round
     # 74.9/77.3 s — ~13%; the in-bucket join + min-agg dominate the
-    # remainder (BENCH.md round 5).  ``per_round_keys=True`` keeps the
-    # round-4 shape as the measurable control.
-    keyed_static = None
+    # remainder (BENCH.md round 5).  ``per_round_keys=True`` is the
+    # round-4 shape: the fallback once the label broadcast would pass
+    # ``BROADCAST_MEMBER_LIMIT`` ids (2 per label row), and the A/B
+    # control.
+    labels = nodes.select(
+        "sh64", F.col("sh64").alias("comp")
+    ).localCheckpoint()
+    # one row per node; counted off the stored labels, not the nodes plan
+    if 2 * labels.count() > BROADCAST_MEMBER_LIMIT:
+        per_round_keys = True
     if not per_round_keys:
         keyed_static = _swap_persist(
             "sketch_lp_keyed",
@@ -1040,9 +1047,6 @@ def _sketch_components(
                 n_part, "k"
             ),
         )
-    labels = nodes.select(
-        "sh64", F.col("sh64").alias("comp")
-    ).localCheckpoint()
     for _ in range(max_iter):
         if per_round_keys:
             keyed = labels.select(

@@ -16,6 +16,9 @@ Scale shape:
   crosses the wire only as the anchor strings being aggregated.
 - ``pagerank_fixed``: the classic ids-only iteration — edges join ranks
   on the source key, contributions aggregate on the destination key.
+  The ``(src, dst)`` edge list is materialized once at the top of the
+  call, so ``link_pagerank_fp``'s link harvest (a full-corpus tokenize)
+  runs once per call, not once per action.
 
 There is one PageRank, and it is fixed-point: rank mass is int64 units
 of ``1/FP_SCALE``, so the per-round sums are order-independent and
@@ -145,17 +148,24 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
     term (≤ deg·1e-12 of the mass per round).  Overflow-safe: every
     intermediate ≤ 85·M < 2^47.
 
-    Per round: edges ⋈ ranks on src, groupBy dst, a lazy 1-row dangling
-    aggregate.  ``localCheckpoint`` every ``CHECKPOINT_EVERY`` rounds —
-    without it Catalyst re-analyzes a k-deep join tree every round
-    (connected components: per-round wall GREW 18→104 s, BENCH.md r3).
-    Returns (node, rank_fp) for every node in the graph.
+    The edge list is materialized once (ids only, ``localCheckpoint``)
+    before anything else, so the ``edges`` plan is evaluated exactly
+    once per call: the node set, the out-degrees and every round read
+    the stored blocks.  Per round: edges ⋈ ranks on src, groupBy dst, a
+    lazy 1-row dangling aggregate.  ``localCheckpoint`` every
+    ``CHECKPOINT_EVERY`` rounds — without it Catalyst re-analyzes a
+    k-deep join tree every round (connected components: per-round wall
+    GREW 18→104 s, BENCH.md r3).  Returns (node, rank_fp) for every
+    node in the graph; every helper checkpoint is freed on return.
+    Raises ``ValueError`` when ``iterations < 1``.
     """
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
     spark = edges.sparkSession
     edges = edges.select(
         F.col(edges.columns[0]).cast("string").alias("src"),
         F.col(edges.columns[1]).cast("string").alias("dst"),
-    )
+    ).localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -164,6 +174,8 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
+        free_local_checkpoint(edges)
+        free_local_checkpoint(nodes)
         return spark.createDataFrame([], "node string, rank_fp long")
     out_deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("deg")
@@ -216,12 +228,10 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
                 free_local_checkpoint(prev_ckpt)
             prev_ckpt = new_ranks
             ranks = new_ranks
-    if iterations > 0:
-        # the returned frame is checkpointed (the last round always
-        # checkpoints), so the helper tables' blocks are releasable;
-        # with iterations=0 ranks still reads THROUGH nodes — keep them
-        free_local_checkpoint(nodes)
-        free_local_checkpoint(out_deg)
+    # the returned frame is checkpointed (the last round always
+    # checkpoints), so the helper tables' blocks are releasable
+    for helper in (edges, nodes, out_deg):
+        free_local_checkpoint(helper)
     return ranks
 
 

@@ -2,6 +2,7 @@ import gzip
 import json
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -36,3 +37,37 @@ def spark():
     s = get_spark(app_name="pytest", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def count_plan_nodes(spark, action):
+    """Run ``action()``; return a Counter of plan-graph node names summed
+    over every SQL execution it started.  Reads the SQL status store,
+    which is kept with ``spark.ui.enabled=false``.  A plan-graph node
+    is counted even when it sits under a cache scan whose blocks are
+    already stored, so a Python-UDF count bounds the UDF evaluations
+    from above; ``localCheckpoint`` leaves no plan behind and does not
+    inflate it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        it = store.executionsList().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next().executionId())
+        return ids
+
+    before = execution_ids()
+    action()
+    counts = Counter()
+    for eid in execution_ids() - before:
+        it = store.planGraph(eid).allNodes().iterator()
+        while it.hasNext():
+            counts[it.next().name()] += 1
+    return counts
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    return count_plan_nodes

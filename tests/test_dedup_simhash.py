@@ -177,13 +177,17 @@ def test_numpy_simhash_twin_equals_reference_loop():
     assert _simhash64_np([]) == 0 == simhash64([])
 
 
-def test_sketch_lp_hoisted_equals_per_round_control(spark):
+def test_sketch_lp_hoisted_equals_per_round_control(spark, monkeypatch):
     """The round-5 hoisted-keys LP and the round-4 per-round-keys
     control (`per_round_keys=True`) must produce the identical
-    component labeling — the A/B lever is pure physical shape."""
+    component labeling — the A/B lever is pure physical shape.  Past
+    ``BROADCAST_MEMBER_LIMIT`` the default path falls back to the
+    per-round-keys shape (no hoisted keyed frame is persisted), with
+    the same labeling."""
     from pyspark.sql import functions as F
 
-    from html_parser_spark.operators.dedup import _sketch_components
+    from html_parser_spark.operators import dedup
+    from html_parser_spark.plans import session
 
     # a chain of close sketches (bit flips) plus isolated values
     base = 0x0123456789ABCDEF
@@ -192,15 +196,19 @@ def test_sketch_lp_hoisted_equals_per_round_control(spark):
     nodes = spark.createDataFrame(
         [(v,) for v in vals], "sh64 long"
     ).select(F.col("sh64"))
-    a = {
-        (r.sh64, r.comp)
-        for r in _sketch_components(nodes, 3, 6, 25, per_round_keys=False).collect()
-    }
-    b = {
-        (r.sh64, r.comp)
-        for r in _sketch_components(nodes, 3, 6, 25, per_round_keys=True).collect()
-    }
-    assert a == b
+
+    def labels(**kw):
+        return {
+            (r.sh64, r.comp)
+            for r in dedup._sketch_components(nodes, 3, 6, 25, **kw).collect()
+        }
+
+    a = labels(per_round_keys=False)
+    assert a == labels(per_round_keys=True)
     # the 4-element chain collapses to one component
     comp_of = dict(a)
     assert len({comp_of[v] for v in vals[:4]}) == 1
+    session.clear_residents()
+    monkeypatch.setattr(dedup, "BROADCAST_MEMBER_LIMIT", 1)
+    assert labels() == a
+    assert "sketch_lp_keyed" not in session._RESIDENT

@@ -113,14 +113,13 @@ def test_corpus_pagerank_runs_and_orders_popular_targets_first(spark):
     assert top > med
 
 
+def _n_stored(spark):
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
 def test_pagerank_releases_superseded_checkpoints(spark):
-    jsc = spark.sparkContext._jsc.sc()
-
-    def n_stored():
-        return len(jsc.getRDDStorageInfo())
-
     spark.catalog.clearCache()
-    base = n_stored()
+    base = _n_stored(spark)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
     )
@@ -129,8 +128,34 @@ def test_pagerank_releases_superseded_checkpoints(spark):
     ranks = pagerank_fixed(edges, iterations=9)
     loss = FP_SCALE - sum(r.rank_fp for r in ranks.collect())
     assert 0 <= loss <= _mass_loss_bound(4, 4, 9)
-    leaked = n_stored() - base
+    leaked = _n_stored(spark) - base
     assert leaked <= 1, f"{leaked} RDDs left in storage (expected ≤1: the returned frame)"
+
+
+def test_pagerank_empty_graph_frees_its_checkpoints(spark):
+    spark.catalog.clearCache()
+    base = _n_stored(spark)
+    edges = spark.createDataFrame([], "src string, dst string")
+    assert pagerank_fixed(edges, iterations=4).collect() == []
+    assert _n_stored(spark) - base == 0
+
+
+def test_pagerank_rejects_zero_iterations(spark):
+    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    with pytest.raises(ValueError):
+        pagerank_fixed(edges, iterations=0)
+
+
+def test_link_pagerank_harvests_once_per_call(spark, plan_nodes):
+    """The link harvest (one MapInPandas node) is evaluated once per
+    call: the edge list is materialized before the node set, the
+    out-degrees and the power rounds read it.  Left live, every action
+    in the call re-ran the harvest (5 MapInPandas nodes)."""
+    counts = plan_nodes(
+        spark,
+        lambda: link_pagerank_fp(spark, SF_DIR, iterations=4, top_k=10).collect(),
+    )
+    assert counts["MapInPandas"] == 1, counts
 
 
 def test_target_stats_match_duckdb_twin_on_goldens(spark):
